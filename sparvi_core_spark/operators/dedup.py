@@ -252,9 +252,12 @@ def ngram_jaccard_pairs(
       ``lsh_candidate_pairs``) to verify instead of self-joining at
       all — the 100 TB path.
 
-    Note: the capped path is mildly eager — it materializes the (small)
-    stop-shingle list and checks its emptiness so benign corpora pay
-    zero rescue overhead; the other paths stay fully lazy.
+    Note: two paths are mildly eager. The capped path materializes the
+    (small) stop-shingle list and checks its emptiness so benign
+    corpora pay zero rescue overhead. The ``candidates`` path runs an
+    eager ``localCheckpoint()`` of the candidate frame (it has two
+    consumers), so the candidate generation runs at call time. Only the
+    uncapped self-join path stays fully lazy.
     """
     # materialize the distinct-shingle frame on first use (lazy local
     # checkpoint): sizes, doc frequencies, both self-join sides and
@@ -769,10 +772,11 @@ def dedup_clusters(
     #   second job. For INTEGRAL ids the digest is the exact
     #   decimal(38,0) label sum (strictly decreasing while labels
     #   change — deterministic; bigint ids cannot overflow it at any
-    #   corpus size). For every other id type (strings, floats) the
-    #   sum is not usable — casting a string to decimal throws under
-    #   ANSI mode (NULLs into false convergence otherwise), and a
-    #   float cast truncates two distinct labels onto one value — so
+    #   corpus size). For every other id type (strings, floats,
+    #   fractional decimals) the sum is not usable — casting a string
+    #   to decimal throws under ANSI mode (NULLs into false convergence
+    #   otherwise), and a float or fractional-decimal cast rounds two
+    #   distinct labels onto one value (8.6 and 9.4 both read 9) — so
     #   the digest is the exact-decimal sum of xxhash64(id, label):
     #   an unchanged digest with ≥1 changed label needs hash deltas
     #   that cancel exactly (~2⁻⁶⁴/round — the collision class the
@@ -787,10 +791,10 @@ def dedup_clusters(
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
+    id_type = edges.schema["a"].dataType
     integral_ids = isinstance(
-        edges.schema["a"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType),
-    )
+        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ) or (isinstance(id_type, T.DecimalType) and id_type.scale == 0)
     _digest = (
         F.col("label") if integral_ids else F.xxhash64(F.col("id"), F.col("label"))
     )

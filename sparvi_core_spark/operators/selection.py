@@ -136,15 +136,27 @@ def _score_dsir_per_doc_arrow(
 
     spark = docs.sparkSession
     jlog = spark._jvm.java.lang.Math.log
+    # one py4j round trip per distinct input: bucket counts repeat (most
+    # are small integers), so the cache turns ~2 calls per bucket into
+    # ~1 per distinct count
+    log_cache: dict[float, float] = {}
+
+    def jvm_log(x: float) -> float:
+        v = log_cache.get(x)
+        if v is None:
+            v = float(jlog(x))
+            log_cache[x] = v
+        return v
+
     a = float(alpha)
     # unseen bucket: (ln(0+α) − ln(0+α)) + const — exactly const, the
     # same cancellation the JVM expression performs
-    log_a = float(jlog(0.0 + a))
+    log_a = jvm_log(0.0 + a)
     W = np.full(num_buckets, (log_a - log_a) + const, dtype=np.float64)
     for r in counts_ck.collect():  # bucket-bounded
         W[int(r["feature"])] = (
-            float(jlog(float(r["n_target"] or 0) + a))
-            - float(jlog(float(r["n_raw"] or 0) + a))
+            jvm_log(float(r["n_target"] or 0) + a)
+            - jvm_log(float(r["n_raw"] or 0) + a)
         ) + const
     D = np.int64(num_buckets)
     ks = tuple(range(1, ngram_n + 1))

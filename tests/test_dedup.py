@@ -142,6 +142,24 @@ def test_dedup_clusters_float_ids_exact_propagation(spark):
     assert got == {2.5: 2.125, 2.4: 2.125, 2.25: 2.125, 2.125: 2.125}
 
 
+def test_dedup_clusters_fractional_decimal_ids(spark):
+    """Fractional-decimal ids take the hash digest: a decimal(38,0)
+    label sum rounds 8.6 and 9.4 both to 9, so the round that moves
+    9.4's label to 8.6 would read as converged and leave 22 and 23
+    labelled 9.4."""
+    from decimal import Decimal
+
+    from sparvi_core_spark.operators.dedup import dedup_clusters
+
+    chain = ["8.6", "20", "21", "9.4", "22", "23"]
+    pairs = spark.createDataFrame(
+        [(Decimal(a), Decimal(b)) for a, b in zip(chain, chain[1:])],
+        "id_a decimal(3,1), id_b decimal(3,1)",
+    )
+    got = {r["id"]: r["cluster"] for r in dedup_clusters(pairs).collect()}
+    assert got == {Decimal(x).quantize(Decimal("0.1")): Decimal("8.6") for x in chain}
+
+
 def test_dedup_clusters_nonconvergence_is_never_silent(spark):
     """A chain longer than max_iter cannot converge (labels move one hop
     per round) — must raise by default, warn when asked, and converge
