@@ -25,7 +25,8 @@ DEFAULTS: dict[str, dict[str, Any]] = {
         # reference: profile_engine.py:295-297 (skip frequent values > 1e6 rows)
         "frequent_values_row_threshold": 1_000_000,
         # skip top-1 frequency for near-unique columns (top-1 of a ~unique
-        # column is noise, and grouping it shuffles ~every row)
+        # column is noise; in approx mode, grouping it would shuffle
+        # ~every row)
         "frequent_values_max_distinct_fraction": 0.5,
         # reference: profile_engine.py:361,378 (LIMIT 10 outliers)
         "outlier_limit": 10,

@@ -6,27 +6,36 @@ completeness, numeric_stats, text_patterns, text_length_stats,
 date_stats, frequent_values, outliers, [samples], anomalies,
 schema_shifts, trends``).
 
-Physical plan (vs the reference's ~dozens of warehouse round-trips):
+Physical plan (vs the reference's ~dozens of warehouse round-trips): a
+fixed set of at most six Spark statements per table, however many
+columns it has.
 
-1. **J1** one wide ``df.agg(...)``: row count + per-column nulls +
-   distincts + numeric/text/date stat families — single column-pruned
-   scan, whole-stage codegen.
-2. **J2** duplicate-group count: ``groupBy(*all).count().filter(>1)`` —
-   hash aggregate with map-side partials (counts *groups*, matching
-   profile_engine.py:100-116).
-3. **J3** frequent values, all columns in ONE pass: ``stack`` the
-   columns into (col, value) pairs → groupBy → per-column top-1 via
-   window (vs the reference's one query per column,
-   profile_engine.py:290-335). Guarded by the reference's 1M-row
-   threshold.
-4. **J4** outliers, all numeric columns in one pass: stack + per-column
-   3σ bounds broadcast as a map literal (the reference's 1-row CTE cross
-   join, profile_engine.py:337-385, becomes two scalar literals).
-5. **J5** ``limit(10)`` samples.
+1. **aggregate** — one wide ``df.agg(...)``: row count + per-column
+   nulls + numeric/text/date stat families (+ HLL distincts in approx
+   mode) — single column-pruned scan, whole-stage codegen.
+2. **quartiles** — exact mode stacks the numeric columns into
+   ``(col_name, double)`` pairs and runs ``groupBy(col_name)`` +
+   ``percentile``: one statement whose per-column final merges are
+   separate groups spread over the reduce tasks. Approx mode is one
+   ``percentile_approx`` agg over all columns.
+3. **value counts** — ``GROUPING SETS ((c1), (c2), …)`` over the typed
+   groupable columns counts rows per (column, value), then reduces per
+   column to the exact distinct count and the top-1 value (vs the
+   reference's one query per column, profile_engine.py:290-335).
+   Approx mode runs it for frequent values only, on the columns that
+   pass the HLL gate.
+4. **duplicates** — ``groupBy(*all).count().filter(>1)`` (counts
+   *groups*, matching profile_engine.py:100-116).
+5. **outliers** — all numeric columns in one stacked pass with
+   per-column 3σ bounds as map literals (the reference's 1-row CTE
+   cross join, profile_engine.py:337-385).
+6. **samples** — ``limit(10)`` of the un-fanned frame.
 
-All jobs are submitted concurrently and re-scan with column pruning —
-no materialization barrier (J2 is also gated — a full-width groupBy of
-a wide fact table is an opt-in, not a default).
+Everything that needs no streaming-agg result (1-4) is submitted at t0;
+outliers and samples (and approx-mode value counts) follow as soon as
+the streaming agg lands. Every statement re-scans with column pruning
+— no materialization barrier — and carries the job description
+``profile_table:<table> <family>``.
 """
 
 from __future__ import annotations
@@ -34,9 +43,11 @@ from __future__ import annotations
 import datetime
 import os
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import IntegralType
 
 from sparvi_core_spark.coltypes import bucket_columns
 from sparvi_core_spark.config import get_config
@@ -47,6 +58,10 @@ from sparvi_core_spark.profiler.compare import (
     empty_trends,
 )
 from sparvi_core_spark.session import read_table
+
+# Spark caps an aggregate at 64 grouping columns
+# (GROUPING_SIZE_LIMIT_EXCEEDED): wider tables are grouped in chunks.
+_GROUPING_COLUMNS_MAX = 64
 
 
 def _q(name: str) -> str:
@@ -62,6 +77,74 @@ def _stack_pairs(df: DataFrame, cols: list[str], cast_to: str) -> DataFrame:
     return df.select(
         F.expr(f"stack({len(cols)}, {args})").alias("col_name", "col_value")
     )
+
+
+def _exact_quartiles(df: DataFrame, cols: list[str]) -> dict[str, list | None]:
+    """Exact q1/median/q3 of every column in one statement.
+
+    Each column is its own group, so the per-column final merges (each
+    an object-hash percentile buffer) spread over the reduce tasks
+    instead of serializing in one. The double cast keeps the result of
+    a per-column ``percentile``, which interpolates in double too."""
+    rows = (
+        _stack_pairs(df, cols, "double")
+        .groupBy("col_name")
+        .agg(F.percentile("col_value", F.lit(M.QUARTILES)).alias("q"))
+        .collect()
+    )
+    return {r["col_name"]: r["q"] for r in rows}
+
+
+def _value_counts(df: DataFrame, cols: list[str]) -> dict[str, tuple]:
+    """``{column: (distinct_count, top)}`` for every column in ``cols``
+    from one statement; ``top`` is a ``(value, frequency)`` row (value
+    cast to string) or None when the column has no non-null value.
+
+    ``GROUPING SETS ((c1), (c2), …)`` counts the rows of each typed
+    (column, value) pair — the Expand that ``count(DISTINCT c1, …)``
+    would plan — and a second aggregate reduces each column to
+    ``count(value)`` (its distinct count) and the top-1 by frequency,
+    ties by the smallest string value. Grouping on the typed value
+    keeps the frequencies consistent with the distinct count (the
+    string form would merge ``array('a, b')`` with ``array('a', 'b')``
+    and split ``-0.0`` from ``0.0``). Columns are renamed to positional
+    names first, and each set is told apart by ``grouping(c)`` rather
+    than by decoding the ``grouping_id()`` bitmask, whose 64th bit is
+    the sign bit of a long."""
+    src = df.select(*[F.col(_q(c)).alias(f"c{i}") for i, c in enumerate(cols)])
+    parts = []
+    for start in range(0, len(cols), _GROUPING_COLUMNS_MAX):
+        chunk = [f"c{i}" for i in range(start, min(start + _GROUPING_COLUMNS_MAX, len(cols)))]
+        idx = F.when(F.grouping(chunk[0]) == 0, start)
+        for i, c in enumerate(chunk[1:], start + 1):
+            idx = idx.when(F.grouping(c) == 0, i)
+        parts.append(
+            src.groupingSets([[c] for c in chunk], *chunk)
+            .agg(idx.alias("idx"), F.count(F.lit(1)).alias("freq"))
+            .select(
+                "idx",
+                # the other columns of a set are NULL: the coalesce is
+                # the set's own value, NULL for its NULL group
+                F.coalesce(*[F.col(c).cast("string") for c in chunk]).alias("value"),
+                "freq",
+            )
+        )
+    rows = (
+        reduce(DataFrame.unionAll, parts)
+        .groupBy("idx")
+        .agg(
+            F.count("value").alias("distinct"),
+            F.min_by(
+                F.struct("value", "freq"),
+                F.when(
+                    F.col("value").isNotNull(),
+                    F.struct(-F.col("freq"), F.col("value")),
+                ),
+            ).alias("top"),
+        )
+        .collect()
+    )
+    return {cols[r["idx"]]: (r["distinct"], r["top"]) for r in rows}
 
 
 def _estimate_size_bytes(df: DataFrame) -> int | None:
@@ -167,165 +250,78 @@ def profile_table(
 
     # Parallelism floor: a compact table (one file, few row groups)
     # would run every profile job at 1-3 task parallelism. All
-    # downstream jobs are value-deterministic under repartitioning
+    # aggregate jobs are value-deterministic under repartitioning
     # (min_by/row_number tie-breaks are by value; sketches are
-    # order-insensitive; the display sample's partition-order bias is
-    # already documented), so the whole profile shares the fanned
-    # frame. Measured sf0.1 lineitem (in-plan exchange included,
-    # same-session A/B): 7.7 s → 5.2 s. No-op at scale.
+    # order-insensitive), so they share the fanned frame. The display
+    # sample reads the source frame: limit/sample need no parallelism,
+    # and the fan-out would shuffle the whole table for 10 rows.
+    # Measured sf0.1 lineitem (in-plan exchange included, same-session
+    # A/B): 7.7 s → 5.2 s. No-op at scale.
     from sparvi_core_spark.plans.fanout import fan_out_compact
 
+    source = df
     df = fan_out_compact(df)
 
-    # --- J1: wide aggregation(s) ---------------------------------------
-    # Plan-shape rules (each measured at sf0.1, see SCALE.md):
-    # * exact count_distinct plans an Expand; exact/approx percentile is
-    #   an object-hash aggregate. Fusing either with the streaming-agg
-    #   family knocks the whole agg out of whole-stage codegen (worst
-    #   case, Expand x object-agg, is ~15x).
-    # * so: streaming aggregates fuse into ONE job; percentiles are a
-    #   second job; exact distincts a third — all submitted
-    #   concurrently (the scheduler interleaves; each is one
-    #   column-pruned scan). Approx distinct (HLL) is a streaming agg
-    #   and joins job 1, making approx mode a two-job single-scan-ish
-    #   pass — the 100 TB default.
+    # --- streaming aggregate --------------------------------------------
+    # Plan-shape rule (measured at sf0.1, see SCALE.md): exact
+    # distincts plan an Expand and percentiles are object-hash
+    # aggregates; fusing either with the streaming-agg family knocks
+    # the whole agg out of whole-stage codegen (worst case ~15x), so
+    # they run as their own statements. Approx distinct (HLL) is a
+    # streaming agg and joins this one.
+    approx_distinct = p["approx_distinct"]
     nd_exprs = [F.count(F.lit(1)).alias("row_count")]
     nd_exprs += M.null_count_exprs(b.all)
-    nd_exprs += M.numeric_stats_exprs(b.numeric)
+    nd_exprs += M.numeric_stats_exprs(b.numeric, b.types)
     nd_exprs += M.text_stats_exprs(b.text)
     nd_exprs += M.text_pattern_exprs(b.text)
     nd_exprs += M.date_stats_exprs(b.date)
-    d_exprs = M.distinct_count_exprs(
-        b.groupable, approx=p["approx_distinct"], rsd=p["approx_distinct_rsd"]
-    )
-    pct_exprs = M.percentile_exprs(
-        b.numeric,
-        approx=p["approx_percentiles"],
-        accuracy=p["approx_percentile_accuracy"],
-    )
-    if p["approx_distinct"]:
-        nd_exprs += d_exprs
-        d_exprs = []
-    extra_jobs: list[list] = []
-    if d_exprs:
-        # EXACT distincts: ONE fused job (single Expand) next to the
-        # other concurrent jobs. An earlier cut of this round split it
-        # into one job per column, which wins when the distinct phase
-        # runs ALONE (no Expand, overlapped final merges: 2.29 s fused
-        # → 0.70 s split, phase-isolated) — but in the full concurrent
-        # shape below the machine is already saturated by the other
-        # jobs and N extra jobs just add ~0.25 s/job of driver
-        # planning/codegen, which dominates the small-table exact path
-        # (measured: whole heavy phase 7.2 s with per-column splits vs
-        # 2.2 s fused, sf0.1 lineitem steady-state). The Expand's N×
-        # row multiplication is bounded by the exact-mode size gate.
-        extra_jobs.append(d_exprs)
-    if pct_exprs:
-        if p["approx_percentiles"]:
+    if approx_distinct:
+        nd_exprs += M.approx_distinct_exprs(b.groupable, p["approx_distinct_rsd"])
+
+    sc = df.sparkSession.sparkContext
+    # Scheduling (guide §2.6 — overlap independent jobs): every
+    # statement that needs nothing from the streaming agg is submitted
+    # at t0; the streaming agg's result gates only the cheap tail
+    # (outliers / samples need row_count or avg/stdev; approx-mode
+    # value counts need the HLL gate). Error semantics: a failed
+    # streaming agg, quartile or exact value-count statement raises out
+    # of profile_table; duplicates, approx-mode frequent values,
+    # outliers and samples degrade into errors[].
+    pool = ThreadPoolExecutor(max_workers=6)
+
+    def submit(family: str, fn):
+        # tag the statement's jobs in its own pool thread (job
+        # descriptions are thread-local), the way run_validations tags
+        # its fused statement
+        def run():
+            prev = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(f"profile_table:{table} {family}")
+            try:
+                return fn()
+            finally:
+                sc.setJobDescription(prev)
+
+        return pool.submit(run)
+
+    groupable = set(b.groupable)
+    try:
+        f_nd = submit("aggregate", lambda: df.agg(*nd_exprs).first().asDict())
+        f_q = None
+        if b.numeric and p["approx_percentiles"]:
             # approx sketches are bounded-memory and mergeable — ONE
             # pass over all columns is the right shape at scale
-            extra_jobs.append(pct_exprs)
-        else:
-            # EXACT percentiles stay one job PER COLUMN: each is an
-            # object-hash aggregate whose final merge is a single task,
-            # so fusing them serializes N merges into one straggler
-            # task that becomes the critical path of the whole profile
-            # (measured: 2.9 s fused vs 2.2 s split, sf0.1 lineitem,
-            # concurrent shape). Unlike the distinct case the split
-            # costs only len(numeric) extra jobs.
-            extra_jobs.extend([e] for e in pct_exprs)
-    # Scheduling (guide §2.6 — overlap independent jobs): submit ALL
-    # heavy jobs at t0 — the streaming agg, the fused distinct job, the
-    # per-column percentile jobs, and the duplicate-group job share no
-    # state, so nothing serializes them. The streaming agg's result
-    # gates only the cheap tail (frequent values / outliers / samples
-    # need row_count or avg/stdev), submitted the moment it lands.
-    # There is no persist/materialization barrier any more: every job
-    # re-scans with column pruning, which measured faster than the
-    # persist at every size where exact mode applies (the persist pass
-    # itself cost 2.8 s at sf0.1 and serialized everything behind it),
-    # and at 100 TB (approx mode, row_count ≫ any cache threshold) a
-    # persist was never taken anyway. Error semantics unchanged: a
-    # failed streaming agg still raises out of profile_table; the
-    # distinct/percentile jobs ride _safe-style degradation only where
-    # they always did (they fill `wide`, whose failures raise on
-    # drain, exactly as before); J2-J5 still degrade into errors[].
-    # Measured sf0.1 same-session A/B (bench settings, steady state):
-    # profile_lineitem 7.7 → ~4 s, profile_orders 3.1 → ~1 s.
-    pool = ThreadPoolExecutor(max_workers=min(16, 5 + len(extra_jobs)))
-    wide = {}
-    f_nd = pool.submit(lambda: df.agg(*nd_exprs).first().asDict())
-    j1_futures = [
-        pool.submit(lambda e=e: df.agg(*e).first().asDict())
-        for e in extra_jobs
-    ]
-    # extra_jobs lists the fused distinct job first (exact mode) — J3
-    # waits on exactly it, not on the percentile jobs behind it
-    d_futures = j1_futures[:1] if d_exprs else []
-
-    try:
-        groupable = set(b.groupable)
-
-        def _assemble():
-            # --- assembly of J1 families (driver-side, no Spark work);
-            # called after the j1_futures drain fills `wide` -----------
-            completeness = {}
-            for c in b.all:
-                nulls = wide[M.a("nulls", c)] or 0
-                entry = {
-                    "nulls": nulls,
-                    "null_percentage": round(nulls / row_count * 100, 2)
-                    if row_count > 0
-                    else 0,
-                }
-                if c in groupable:
-                    distinct = wide.get(M.a("distinct", c)) or 0
-                    entry["distinct_count"] = distinct
-                    entry["distinct_percentage"] = (
-                        round(distinct / row_count * 100, 2) if row_count > 0 else 0
-                    )
-                else:
-                    # non-groupable column (e.g. MapType): distinct is not
-                    # computable in Spark — explicit None beats a silent 0
-                    entry["distinct_count"] = None
-                    entry["distinct_percentage"] = None
-                completeness[c] = entry
-
-            numeric_stats = {}
-            for c in b.numeric:
-                q = wide[M.a("quartiles", c)] or [None, None, None]
-                numeric_stats[c] = {
-                    "min": wide[M.a("min", c)],
-                    "max": wide[M.a("max", c)],
-                    "avg": wide[M.a("avg", c)],
-                    "sum": wide[M.a("sum", c)],
-                    "stdev": wide[M.a("stdev", c)],
-                    "q1": q[0],
-                    "median": q[1],
-                    "q3": q[2],
-                }
-            return completeness, numeric_stats
-
-        def _assemble_dates():
-            # distinct_count for date columns rides the distinct jobs —
-            # assembled after the drain like completeness/numeric_stats
-            date_stats = {}
-            for c in b.date:
-                mn, mx = wide[M.a("min_date", c)], wide[M.a("max_date", c)]
-                days = None
-                if mn is not None and mx is not None:
-                    days = (_to_date(mx) - _to_date(mn)).days
-                date_stats[c] = {
-                    "min_date": mn,
-                    "max_date": mx,
-                    "distinct_count": wide[M.a("distinct", c)] or 0,
-                    "date_range_days": days,
-                }
-            return date_stats
-
-        # --- J2-J5: independent jobs, submitted concurrently -----------
-        # (dup groups, frequent values, outliers, samples share no state;
-        # the scheduler interleaves their stages across the cluster)
+            approx_exprs = M.approx_quartile_exprs(
+                b.numeric, p["approx_percentile_accuracy"]
+            )
+            f_q = submit(
+                "quartiles", lambda: dict(zip(b.numeric, df.agg(*approx_exprs).first()))
+            )
+        elif b.numeric:
+            f_q = submit("quartiles", lambda: _exact_quartiles(df, b.numeric))
+        f_vc = None
+        if b.groupable and not approx_distinct:
+            f_vc = submit("value counts", lambda: _value_counts(df, b.groupable))
 
         def _row_hash_key():
             # One md5 per row through the shuffle instead of the full
@@ -361,63 +357,33 @@ def profile_table(
                 groups = df.groupBy(*b.all)
             return groups.count().filter(F.col("count") > 1).count()
 
-        def j3_frequent_values() -> dict:
-            # A11 — top-1 per column in one pass. Near-unique columns
-            # (distinct fraction above the config cap) are skipped:
-            # their top-1 is noise and grouping them shuffles nearly
-            # every row. min_by over struct(-freq, value) is a pure
-            # reduction (map-side partials, no window sort): min of
-            # (-freq, value) ≡ max freq, ties by smallest value.
-            out: dict = {}
-            # gate on the distinct counts: in exact mode they arrive on
-            # the d_futures this thunk waits for (drained into a LOCAL
-            # dict — the main thread fills `wide` independently); in
-            # approx mode they were in the streaming agg before this
-            # job was submitted
-            dist = {}
-            for fut in d_futures:
-                dist.update(fut.result())
-            freq_cols = [
-                c
-                for c in b.groupable
-                if (
-                    dist.get(M.a("distinct", c), wide.get(M.a("distinct", c)))
-                    or 0
-                )
-                <= row_count * p["frequent_values_max_distinct_fraction"]
-            ]
-            # Surface skipped columns explicitly (absence ≠ "no data"):
-            # near-unique columns whose top-1 would be noise, and
-            # non-groupable columns.
-            for c in b.all:
-                if c not in freq_cols:
-                    out[c] = {"skipped": "near_unique" if c in groupable else "not_groupable"}
+        def frequent_cols(distinct: dict) -> list[str]:
+            # Near-unique columns (distinct fraction above the config
+            # cap) are skipped: their top-1 is noise.
+            cap = row_count * p["frequent_values_max_distinct_fraction"]
+            return [c for c in b.groupable if (distinct.get(c) or 0) <= cap]
+
+        def frequent_values(freq_cols: list[str], counts: dict) -> dict:
+            # A11 — top-1 per column, from the value-count statement.
+            # Skipped columns are surfaced explicitly (absence ≠ "no
+            # data"): near-unique columns and non-groupable columns.
             if not (0 < row_count <= p["frequent_values_row_threshold"]):
                 return {c: {"skipped": "row_threshold"} for c in b.all}
-            if not freq_cols:
-                return out
-            pairs = _stack_pairs(df, freq_cols, "string").filter(
-                F.col("col_value").isNotNull()
-            )
-            counts = pairs.groupBy("col_name", "col_value").agg(
-                F.count(F.lit(1)).alias("frequency")
-            )
-            top = counts.groupBy("col_name").agg(
-                F.min_by(
-                    F.struct("col_value", "frequency"),
-                    F.struct(-F.col("frequency"), F.col("col_value")),
-                ).alias("top")
-            ).collect()
-            kind_of = {c: ("numeric" if c in b.numeric else "") for c in b.all}
-            for r in top:
-                out[r["col_name"]] = {
+            out: dict = {
+                c: {"skipped": "near_unique" if c in groupable else "not_groupable"}
+                for c in b.all
+                if c not in freq_cols
+            }
+            for c in freq_cols:
+                top = counts[c][1] if c in counts else None
+                if top is None:
+                    continue  # no non-null value
+                out[c] = {
                     "value": _restore_value(
-                        r["top"]["col_value"], kind_of[r["col_name"]]
+                        top["value"], "numeric" if c in b.numeric else ""
                     ),
-                    "frequency": r["top"]["frequency"],
-                    "percentage": round(
-                        r["top"]["frequency"] * 100.0 / row_count, 2
-                    ),
+                    "frequency": top["freq"],
+                    "percentage": round(top["freq"] * 100.0 / row_count, 2),
                 }
             return out
 
@@ -457,25 +423,26 @@ def profile_table(
 
         def j5_samples() -> list:
             # S6 — display sample. "limit" is the reference's plain
-            # LIMIT; "random" is the TABLESAMPLE path: df.sample with an
+            # LIMIT; "random" is the TABLESAMPLE path: sample with an
             # oversampled fraction (sample() cannot guarantee exact
-            # counts) then limit. Scans stop early either way — no full
-            # pass at 100 TB. Known bias, accepted for early-stop: the
-            # limit takes the FIRST n sampled rows in partition order,
-            # skewing the display sample toward early partitions; a
-            # uniform n-row draw would need orderBy(rand(seed)) on the
-            # sampled frame, forcing a full sample materialization —
-            # the wrong trade for a 10-row display sample at 100 TB.
+            # counts) then limit. Both read the source frame, so scans
+            # stop early — no full pass at 100 TB. Known bias, accepted
+            # for early-stop: the limit takes the FIRST n sampled rows
+            # in the source's partition order, skewing the display
+            # sample toward early files; a uniform n-row draw would
+            # need orderBy(rand(seed)) on the sampled frame, forcing a
+            # full sample materialization — the wrong trade for a
+            # 10-row display sample at 100 TB.
             if not include_samples:
                 return []
             n = p["sample_row_limit"]
             if p["sample_method"] == "random" and row_count > n:
                 frac = min(1.0, (n * 5.0) / row_count)
-                picked = df.sample(
+                picked = source.sample(
                     withReplacement=False, fraction=frac, seed=p["sample_seed"]
                 ).limit(n)
             else:
-                picked = df.limit(n)
+                picked = source.limit(n)
             return [r.asDict() for r in picked.collect()]
 
         # Per-metric error isolation (the reference wraps each metric
@@ -491,46 +458,104 @@ def profile_table(
                 errors[name] = f"{type(ex).__name__}: {ex}"
                 return default
 
-        # J2 needs nothing from the streaming agg — it runs from t0
-        f2 = pool.submit(j2_duplicates)
+        # duplicates need nothing from the streaming agg — t0 too
+        f2 = submit("duplicates", j2_duplicates)
         # drain the streaming agg: row_count gates the tail jobs and a
         # failure here raises out of profile_table (contract unchanged)
-        wide.update(f_nd.result())
+        wide = f_nd.result()
         row_count = wide["row_count"]
         stats_for_outliers = {
             c: (wide[M.a("avg", c)], wide[M.a("stdev", c)]) for c in b.numeric
         }
-        text_length_stats = {
-            c: {
-                "min_length": wide[M.a("min_length", c)],
-                "max_length": wide[M.a("max_length", c)],
-                "avg_length": wide[M.a("avg_length", c)],
-            }
-            for c in b.text
-        }
-        text_patterns = {
-            c: {
-                "email_pattern_count": wide[M.a("email", c)] or 0,
-                "numeric_pattern_count": wide[M.a("numeric_pat", c)] or 0,
-                "date_pattern_count": wide[M.a("date_pat", c)] or 0,
-            }
-            for c in b.text
-        }
-        f3 = pool.submit(j3_frequent_values)
-        f4 = pool.submit(j4_outliers)
-        f5 = pool.submit(j5_samples)
-        # drain the distinct/percentile jobs while J2-J5 run, then
-        # assemble the families that needed their results
-        for f in j1_futures:
-            wide.update(f.result())
-        completeness, numeric_stats = _assemble()
-        date_stats = _assemble_dates()
+        f4 = submit("outliers", j4_outliers)
+        f5 = submit("samples", j5_samples)
+        if approx_distinct:
+            distinct = {c: wide[M.a("distinct", c)] for c in b.groupable}
+            freq_cols = frequent_cols(distinct)
+            counts = {}
+            if freq_cols and 0 < row_count <= p["frequent_values_row_threshold"]:
+                f3 = submit("value counts", lambda: _value_counts(df, freq_cols))
+                counts = _safe("frequent_values", f3, None)
+            frequent = {} if counts is None else frequent_values(freq_cols, counts)
+        else:
+            counts = f_vc.result() if f_vc else {}
+            distinct = {c: counts[c][0] if c in counts else 0 for c in b.groupable}
+            frequent = frequent_values(frequent_cols(distinct), counts)
+        quartiles = f_q.result() if f_q else {}
         duplicate_count = _safe("duplicate_count", f2, None)
-        frequent_values = _safe("frequent_values", f3, {})
         outliers = _safe("outliers", f4, {})
         samples = _safe("samples", f5, [])
     finally:
         pool.shutdown(wait=False, cancel_futures=True)
+
+    completeness = {}
+    for c in b.all:
+        nulls = wide[M.a("nulls", c)] or 0
+        entry = {
+            "nulls": nulls,
+            "null_percentage": round(nulls / row_count * 100, 2)
+            if row_count > 0
+            else 0,
+        }
+        if c in groupable:
+            entry["distinct_count"] = distinct[c] or 0
+            entry["distinct_percentage"] = (
+                round(entry["distinct_count"] / row_count * 100, 2)
+                if row_count > 0
+                else 0
+            )
+        else:
+            # non-groupable column (e.g. MapType): distinct is not
+            # computable in Spark — explicit None beats a silent 0
+            entry["distinct_count"] = None
+            entry["distinct_percentage"] = None
+        completeness[c] = entry
+
+    numeric_stats = {}
+    for c in b.numeric:
+        q = quartiles.get(c) or [None, None, None]
+        total = wide[M.a("sum", c)]
+        if total is not None and isinstance(b.types[c], IntegralType):
+            total = int(total)  # summed as decimal(38,0)
+        numeric_stats[c] = {
+            "min": wide[M.a("min", c)],
+            "max": wide[M.a("max", c)],
+            "avg": wide[M.a("avg", c)],
+            "sum": total,
+            "stdev": wide[M.a("stdev", c)],
+            "q1": q[0],
+            "median": q[1],
+            "q3": q[2],
+        }
+
+    text_length_stats = {
+        c: {
+            "min_length": wide[M.a("min_length", c)],
+            "max_length": wide[M.a("max_length", c)],
+            "avg_length": wide[M.a("avg_length", c)],
+        }
+        for c in b.text
+    }
+    text_patterns = {
+        c: {
+            "email_pattern_count": wide[M.a("email", c)] or 0,
+            "numeric_pattern_count": wide[M.a("numeric_pat", c)] or 0,
+            "date_pattern_count": wide[M.a("date_pat", c)] or 0,
+        }
+        for c in b.text
+    }
+    date_stats = {}
+    for c in b.date:
+        mn, mx = wide[M.a("min_date", c)], wide[M.a("max_date", c)]
+        days = None
+        if mn is not None and mx is not None:
+            days = (_to_date(mx) - _to_date(mn)).days
+        date_stats[c] = {
+            "min_date": mn,
+            "max_date": mx,
+            "distinct_count": distinct[c] or 0,
+            "date_range_days": days,
+        }
 
     profile: dict[str, Any] = {
         "table": table,
@@ -542,7 +567,7 @@ def profile_table(
         "text_patterns": text_patterns,
         "text_length_stats": text_length_stats,
         "date_stats": date_stats,
-        "frequent_values": frequent_values,
+        "frequent_values": frequent,
         "outliers": outliers,
     }
     # record which metric families are approximate (auto-flip or caller

@@ -174,10 +174,10 @@ def test_local_approx_percentile_tolerance(spark, duck):
     tolerance of the exact DuckDB percentile_cont: at accuracy=10000
     the sketch's rank error is ~1/accuracy, so the approx value must
     fall inside the exact [p-0.01, p+0.01] quantile envelope."""
-    from sparvi_core_spark.profiler.metrics import percentile_exprs
+    from sparvi_core_spark.profiler.metrics import approx_quartile_exprs
 
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    row = df.agg(*percentile_exprs(["l_extendedprice"], approx=True)).collect()[0]
+    row = df.agg(*approx_quartile_exprs(["l_extendedprice"])).collect()[0]
     approx_q = row["quartiles//l_extendedprice"]
     for p, got in zip((0.25, 0.5, 0.75), approx_q):
         lo, hi = duck.execute(
@@ -192,12 +192,12 @@ def test_local_hll_tolerance(spark, duck):
     """approx_count_distinct (HLL++) within tolerance of the exact
     count. Sketches differ across engines, so the oracle is the exact
     DuckDB count with a 4·rsd relative band."""
-    from sparvi_core_spark.profiler.metrics import distinct_count_exprs
+    from sparvi_core_spark.profiler.metrics import approx_distinct_exprs
 
     rsd = 0.02
     cols = ["o_custkey", "o_orderdate", "o_orderpriority"]
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    row = df.agg(*distinct_count_exprs(cols, approx=True, rsd=rsd)).collect()[0]
+    row = df.agg(*approx_distinct_exprs(cols, rsd)).collect()[0]
     exact = duck.execute(
         "SELECT " + ", ".join(f"count(DISTINCT {c})" for c in cols) + " FROM orders"
     ).fetchone()
